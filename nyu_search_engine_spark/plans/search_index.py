@@ -18,30 +18,35 @@ Spark-first lifecycle:
      shard top-k -> global TakeOrdered(k) over n_shards*k candidate rows.
  3c. rank: the terminal TakeOrderedAndProject merges per-partition numpy
      heaps on the DRIVER (the reference's size-k heap merge); rank is a
-     driver enumeration and the result is recreated as a VALUES-literal
-     LocalRelation — queries execute EAGERLY inside search()/search_batch
-     (one Spark stage less than the former lazy Window form; see the
-     search() docstring).
- 4. decorate: the bounded top-k rows are already on the driver; their
-    doc_id set is pushed into the docs Parquet scan as an IN filter
-    (doc_id-range-ordered files => row-group min/max skipping: a point
-    lookup over a potentially 10^12-row table), then BroadcastHashJoin
-    the recreated top-k.
+     driver enumeration over the <= k collected rows — queries execute
+     EAGERLY inside search()/search_batch (one Spark stage less than the
+     former lazy Window form; see the search() docstring).
+ 4. decorate: on the DRIVER, no Spark job. A (min, max) doc_id index of
+    the docs Parquet row groups is read from the file footers once (first
+    decorate); per query, np.searchsorted picks the row groups that hold
+    a hit, pyarrow reads only those (ParquetFile.read_row_groups, through
+    fsio's filesystem, so URI roots work) and keeps the hit rows. The
+    ranked rows and their doc columns become one VALUES-literal
+    LocalRelation, whose collect() is driver-only. The docs table is
+    written in doc_id-range order, so a hit costs <= 1 row group read.
 
 Paths 3a and 3b are rank-identical by construction (pytest-enforced).
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..constants import DOCS_DIR
 from ..functions.bm25 import idf_np, score_col
 from ..functions.varbyte import decode_postings_map
 from ..operators.daat import TermSlice, shard_topk_and, shard_topk_or
-from ..sources import index_io
+from ..sources import fsio, index_io
 from .search import Query
 
 
@@ -61,11 +66,115 @@ LEXICON_DRIVER_CACHE_MAX_TERMS = 4_000_000
 # measured Arrow buffer size is the truth): above this the cache is
 # dropped and the distributed probe is used
 LEXICON_DRIVER_CACHE_MAX_BYTES = 256 * 1024 * 1024
-# Max distinct doc_ids inlined as a Parquet IN pushdown by the decorate
-# lookup (_lookup_join); larger candidate sets keep only the broadcast
-# join — a huge literal IN list bloats the plan and stops paying for
-# itself in row-group skipping.
-DECORATE_PUSHDOWN_MAX_IDS = 4096
+
+
+def _str_lit(v: str | None) -> str:
+    # UTF-8 hex BINARY literal cast to STRING: exact for any text, with no
+    # quote or backslash escaping for the SQL parser to interpret
+    if v is None:
+        return "CAST(NULL AS STRING)"
+    return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+
+
+# result column -> (SQL type, VALUES literal of one value); repr(float)
+# round-trips exactly through Spark's double literal parser, so scores
+# stay bitwise identical
+_COLS = {
+    "query_id": ("BIGINT", lambda v: f"{v}L"),
+    "rank": ("INT", str),
+    "doc_id": ("BIGINT", lambda v: f"{v}L"),
+    "score": ("DOUBLE", lambda v: f"CAST({float(v)!r} AS DOUBLE)"),
+    "repo": ("STRING", _str_lit),
+    "path": ("STRING", _str_lit),
+    "commit": ("STRING", _str_lit),
+}
+RANKED = ("rank", "doc_id", "score")
+BATCH = ("query_id",) + RANKED
+DOC_COLS = ("repo", "path", "commit")
+
+
+class _DocLookup:
+    """doc_id -> (repo, path, commit) point lookup over the docs Parquet
+    table, on the driver.
+
+    Built once from the file footers: one (lo, hi) doc_id entry per row
+    group (a group without statistics spans every id), sorted by lo, plus
+    the running max of hi, so the groups holding an id are found by
+    ``np.searchsorted`` and a walk down that stops once no earlier group
+    reaches the id — one step per id when ranges are disjoint, as
+    ``build_index``'s doc_id-range-ordered write makes them. A lookup
+    reads only those row groups (``ParquetFile.read_row_groups``) and
+    keeps the hit rows with ``pc.is_in``: at most one row group per
+    distinct id, never the table. The index costs 24 B per row group.
+    (``pyarrow.dataset`` with an ``isin`` filter does not prune row
+    groups on pyarrow 16, and an OR of equalities re-reads every footer
+    per query.)"""
+
+    COLUMNS = ("doc_id",) + DOC_COLS
+
+    def __init__(self, fs, root: str) -> None:
+        import pyarrow.parquet as pq
+        from pyarrow import fs as pafs
+
+        self.fs = fs
+        infos = fs.get_file_info(pafs.FileSelector(root))
+        # the files Spark reads: hidden (_SUCCESS, .crc) ones are skipped
+        self.files = sorted(i.path for i in infos
+                            if i.type == pafs.FileType.File
+                            and not i.base_name.startswith(("_", ".")))
+        lo, hi, file_no, group_no = [], [], [], []
+        for f, path in enumerate(self.files):
+            with fs.open_input_file(path) as fh:
+                md = pq.ParquetFile(fh).metadata
+            col = md.schema.names.index("doc_id")
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(col).statistics
+                has = st is not None and st.has_min_max
+                lo.append(st.min if has else np.iinfo(np.int64).min)
+                hi.append(st.max if has else np.iinfo(np.int64).max)
+                file_no.append(f)
+                group_no.append(g)
+        order = np.argsort(np.asarray(lo, dtype=np.int64), kind="stable")
+        self.lo = np.asarray(lo, dtype=np.int64)[order]
+        self.hi = np.asarray(hi, dtype=np.int64)[order]
+        self.hi_max = np.maximum.accumulate(self.hi) if len(order) else self.hi
+        self.file_no = np.asarray(file_no, dtype=np.int64)[order]
+        self.group_no = np.asarray(group_no, dtype=np.int64)[order]
+
+    def row_groups(self, ids: np.ndarray) -> list[int]:
+        """Sorted index entries whose [lo, hi] holds at least one id."""
+        out = set()
+        starts = np.searchsorted(self.lo, ids, side="right") - 1
+        for x, j in zip(ids.tolist(), starts.tolist()):
+            while j >= 0 and self.hi_max[j] >= x:
+                if self.hi[j] >= x:
+                    out.add(j)
+                j -= 1
+        return sorted(out)
+
+    def get(self, ids) -> dict[int, tuple]:
+        """{doc_id: (repo, path, commit)} of the ids present in the table."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        want = np.unique(np.asarray(list(ids), dtype=np.int64))
+        by_file: dict[int, list[int]] = defaultdict(list)
+        for e in self.row_groups(want):
+            by_file[int(self.file_no[e])].append(int(self.group_no[e]))
+        value_set = pa.array(want)
+        out: dict[int, tuple] = {}
+        for f, groups in by_file.items():
+            with self.fs.open_input_file(self.files[f]) as fh:
+                tbl = pq.ParquetFile(fh).read_row_groups(
+                    groups, columns=list(self.COLUMNS))
+            tbl = tbl.filter(pc.is_in(tbl["doc_id"], value_set=value_set))
+            for doc_id, *keys in zip(*(tbl[c].to_pylist() for c in self.COLUMNS)):
+                out.setdefault(doc_id, tuple(keys))
+        return out
 
 
 class _DriverLexicon:
@@ -149,6 +258,9 @@ class IndexSearcher:
         # the lexicon is hot (probed per query): keep it cluster-cached
         self.lexicon = index_io.read_lexicon(self.spark, index_root).persist()
         self.docs = index_io.read_docs(self.spark, index_root)
+        # built on the first decorate, so opening a searcher reads no footer
+        self._docs_lookup: _DocLookup | None = None
+        self._empties: dict[tuple[str, ...], DataFrame] = {}
         stats = index_io.read_stats(self.spark, index_root)
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
@@ -203,28 +315,28 @@ class IndexSearcher:
         reference's synchronous query processor) and the returned
         DataFrame is recreated from the <= k merged rows — the driver-side
         heap merge + rank costs one Spark stage less per query than the
-        lazy Window form, and decoration's doc_id point-lookup pushdown
-        requires the ids up front anyway. The result composes like any
-        DataFrame, but ``.explain()`` shows a local relation, not the
-        kernel subplan.
+        lazy Window form, and the driver-side decorate lookup needs the
+        ids up front anyway. The result composes like any DataFrame, but
+        ``.explain()`` shows a local relation, not the kernel subplan, and
+        its ``collect()`` runs no Spark job.
 
         ``and_bounds=False`` disables the conjunctive kernel's
         block-max theta pruning (A/B arm — rank-identical results)."""
         planned = self.plan_terms(query)
         n_query_terms = len(set(query.terms))
         if not planned or (query.mode == "AND" and len(planned) < n_query_terms):
-            return self._empty(decorate)
+            return self._empty(RANKED + DOC_COLS if decorate else RANKED)
         if method == "exhaustive":
-            topk = self._exhaustive(planned, query)
+            ranked = self._exhaustive(planned, query)
         elif method == "pruned":
-            topk = self._pruned(planned, query, and_bounds=and_bounds)
+            ranked = self._pruned(planned, query, and_bounds=and_bounds)
         else:
             raise ValueError(f"unknown method {method!r}")
-        return self._decorate(topk) if decorate else topk
+        return self._decorate(ranked) if decorate else self._local(RANKED, ranked)
 
     # --- path 3a: exhaustive decode + hash agg --------------------------------
 
-    def _exhaustive(self, planned, query: Query) -> DataFrame:
+    def _exhaustive(self, planned, query: Query) -> list[tuple]:
         return self._rank(self._exhaustive_scored(planned, query), query.k)
 
     def _exhaustive_scored(self, planned, query: Query) -> DataFrame:
@@ -273,7 +385,8 @@ class IndexSearcher:
 
     # --- path 3b: per-shard DAAT/BMW kernel ------------------------------------
 
-    def _pruned(self, planned, query: Query, and_bounds: bool = True) -> DataFrame:
+    def _pruned(self, planned, query: Query,
+                and_bounds: bool = True) -> list[tuple]:
         return self._rank(
             self._pruned_scored(planned, query, and_bounds), query.k
         )
@@ -358,8 +471,9 @@ class IndexSearcher:
         """
         items = list(queries.items()) if isinstance(queries, dict) else list(queries)
         all_terms = sorted({t for _, q in items for t in q.terms})
+        cols = BATCH + DOC_COLS if decorate else BATCH
         if not items or not all_terms:
-            return self._empty_batch(decorate)
+            return self._empty(cols)
         df_by_term = self._probe_df(all_terms)
         # per-query plan: rarest-first kept terms; OOV => AND empty, OR skip
         qplans: dict[int, tuple[str, int, list[tuple[str, float]]]] = {}
@@ -373,16 +487,15 @@ class IndexSearcher:
                 q.mode, q.k, [(t, idf_np(d, self.n_docs)) for d, t in meta]
             )
         if not qplans:
-            return self._empty_batch(decorate)
+            return self._empty(cols)
         if max_terms_per_chunk == "auto":
             union = len({t for _, _, tl in qplans.values() for t, _ in tl})
             max_terms_per_chunk = max(512, union // 3)
         chunks = self._chunk_qplans(qplans, max_terms_per_chunk)
-        parts = [self._batch_topk(ch) for ch in chunks]
-        topk = parts[0]
-        for p in parts[1:]:
-            topk = topk.unionByName(p)
-        return self._decorate_batch(topk) if decorate else topk
+        # (query_id, rank) order
+        ranked = sorted(r for ch in chunks for r in self._batch_topk(ch))
+        return (self._decorate_batch(ranked) if decorate
+                else self._local(BATCH, ranked))
 
     @staticmethod
     def _chunk_qplans(
@@ -413,9 +526,10 @@ class IndexSearcher:
 
     def _batch_topk(
         self, qplans: dict[int, tuple[str, int, list[tuple[str, float]]]]
-    ) -> DataFrame:
+    ) -> list[tuple]:
         """One scan + per-shard multi-query kernel, then per-query rank
-        merged driver-side over the bounded candidates."""
+        merged driver-side over the bounded candidates: a list of
+        (query_id, rank, doc_id, score) rows."""
         cand = self._batch_cand(qplans)
         # r6: per-query rank assigned driver-side over the collected
         # candidates — bounded at n_queries_in_chunk * n_shards * k rows
@@ -426,16 +540,15 @@ class IndexSearcher:
         by_qid: dict[int, list] = {}
         for r in rows:
             by_qid.setdefault(r["query_id"], []).append(r)
-        qids, out = [], []
+        out = []
         for qid, (_, k, _) in qplans.items():
             got = by_qid.get(qid)
             if not got:
                 continue
             got.sort(key=lambda r: (-r["score"], r["doc_id"]))
-            for i, r in enumerate(got[:k]):
-                qids.append(int(qid))
-                out.append((i + 1, int(r["doc_id"]), float(r["score"])))
-        return self._ranked_local(out, qids=qids)
+            out.extend((int(qid), i + 1, int(r["doc_id"]), float(r["score"]))
+                       for i, r in enumerate(got[:k]))
+        return out
 
     def _batch_cand(
         self, qplans: dict[int, tuple[str, int, list[tuple[str, float]]]]
@@ -486,110 +599,58 @@ class IndexSearcher:
 
     # --- shared tail ------------------------------------------------------------
 
-    def _rank(self, scored: DataFrame, k: int) -> DataFrame:
-        """Global top-k + rank. r6: ``orderBy().limit(k)`` executes as a
-        TERMINAL TakeOrderedAndProject (per-partition numpy heaps merged on
-        the driver — the reference's size-k heap merge), and the rank
-        column is attached driver-side over the <= k collected rows. The
-        former lazy form stacked Window on top of the limit, which
-        re-planned TakeOrdered into Sort + single-partition Exchange +
-        WindowExec — one extra stage (and the WindowExec
-        empty-partition-spec warning) per query, measured ~0.15-0.25 s of
-        the ~0.5 s single-query latency. Executes eagerly (see search())."""
+    def _rank(self, scored: DataFrame, k: int) -> list[tuple]:
+        """Global top-k + rank: a list of (rank, doc_id, score) rows. r6:
+        ``orderBy().limit(k)`` executes as a TERMINAL TakeOrderedAndProject
+        (per-partition numpy heaps merged on the driver — the reference's
+        size-k heap merge), and the rank is attached driver-side over the
+        <= k collected rows. The former lazy form stacked Window on top of
+        the limit, which re-planned TakeOrdered into Sort +
+        single-partition Exchange + WindowExec — one extra stage (and the
+        WindowExec empty-partition-spec warning) per query, measured
+        ~0.15-0.25 s of the ~0.5 s single-query latency. Executes eagerly
+        (see search())."""
         rows = scored.orderBy(F.desc("score"), "doc_id").limit(k).collect()
-        return self._ranked_local(
-            [(i + 1, int(r["doc_id"]), float(r["score"]))
-             for i, r in enumerate(rows)]
-        )
+        return [(i + 1, int(r["doc_id"]), float(r["score"]))
+                for i, r in enumerate(rows)]
 
-    def _ranked_local(self, rows: list[tuple[int, int, float]],
-                      qids: list[int] | None = None) -> DataFrame:
-        """Bounded ranked rows -> a VALUES-literal LocalRelation.
+    def _local(self, cols: tuple[str, ...], rows: list[tuple]) -> DataFrame:
+        """Bounded result rows -> one VALUES-literal LocalRelation.
 
         ``collect()`` on it is driver-only (no job) and building it costs
         ~5 ms; ``createDataFrame(list)`` parallelizes an RDD whose collect
-        is a full job (~0.3 s measured). ``repr(float)`` round-trips
-        exactly through Spark's double literal parser, so scores stay
-        bitwise identical."""
+        is a full job (~0.3 s measured)."""
         if not rows:
-            return (self._empty(False) if qids is None
-                    else self._empty_batch(False))
-        if qids is None:
-            vals = ", ".join(
-                f"({rk},{did}L,CAST({float(sc)!r} AS DOUBLE))"
-                for rk, did, sc in rows
-            )
-            return self.spark.sql(
-                "SELECT rank, doc_id, score FROM VALUES "
-                f"{vals} AS t(rank, doc_id, score)"
-            )
+            return self._empty(cols)
+        lits = [_COLS[c][1] for c in cols]
         vals = ", ".join(
-            f"({qid}L,{rk},{did}L,CAST({float(sc)!r} AS DOUBLE))"
-            for qid, (rk, did, sc) in zip(qids, rows)
+            "(" + ",".join(lit(v) for lit, v in zip(lits, r)) + ")"
+            for r in rows
         )
-        return self.spark.sql(
-            "SELECT query_id, rank, doc_id, score FROM VALUES "
-            f"{vals} AS t(query_id, rank, doc_id, score)"
-        )
+        names = ", ".join(f"`{c}`" for c in cols)
+        return self.spark.sql(f"SELECT * FROM VALUES {vals} AS t({names})")
 
-    def _decorate(self, topk: DataFrame) -> DataFrame:
-        return self._lookup_join(
-            topk,
-            ["rank", "doc_id", "score", "repo", "path", "commit"],
-            ["rank"],
-            self._empty(True),
-        )
+    def _empty(self, cols: tuple[str, ...]) -> DataFrame:
+        """The empty result with these columns, built once per column set:
+        a ``LIMIT 0`` local relation, whose collect() runs no job
+        (``createDataFrame([], schema)``'s does: ~0.5 s measured)."""
+        if cols not in self._empties:
+            sel = ", ".join(f"CAST(NULL AS {_COLS[c][0]}) AS `{c}`" for c in cols)
+            self._empties[cols] = self.spark.sql(f"SELECT {sel} LIMIT 0")
+        return self._empties[cols]
 
-    def _decorate_batch(self, topk: DataFrame) -> DataFrame:
-        return self._lookup_join(
-            topk,
-            ["query_id", "rank", "doc_id", "score", "repo", "path", "commit"],
-            ["query_id", "rank"],
-            self._empty_batch(True),
-        )
+    def _decorate(self, ranked: list[tuple]) -> DataFrame:
+        return self._local(RANKED + DOC_COLS, self._with_docs(ranked, 1))
 
-    def _lookup_join(self, topk: DataFrame, cols: list[str],
-                     order: list[str], empty: DataFrame) -> DataFrame:
-        """Decorate top-k rows with the doc table (J3) as a PRUNED lookup.
+    def _decorate_batch(self, ranked: list[tuple]) -> DataFrame:
+        return self._local(BATCH + DOC_COLS, self._with_docs(ranked, 2))
 
-        The top-k side is bounded at n_queries*k rows — the same rows a
-        plain ``broadcast(topk)`` would collect to the driver anyway. We
-        collect them explicitly instead, so that (a) the kernel subplan
-        executes exactly once (the old lazy broadcast re-ran it for the
-        big-side stream), and (b) the doc_id set can be pushed INTO the
-        docs Parquet scan as an IN filter. ``build_index`` writes the doc
-        table in doc_id-range order (the range-partitioned assignment is
-        the write partitioning), so row-group min/max stats skip all but
-        the hit groups — a point lookup, not a table scan. OSS Spark's
-        BroadcastHashJoin has no runtime row-group pruning: the lazy form
-        streamed the ENTIRE (potentially 10^12-row) docs table for a
-        10-row decorate. Above DECORATE_PUSHDOWN_MAX_IDS distinct ids
-        (giant batches) the IN list stops helping row-group stats and
-        bloats the plan, so the filter is dropped and only the
-        recreated-broadcast join remains. Note: decoration therefore
-        executes the query eagerly at plan-build time.
-        """
-        rows = topk.collect()
-        if not rows:
-            return empty
-        small = self.spark.createDataFrame(rows, topk.schema)
-        big = self.docs
-        ids = sorted({r["doc_id"] for r in rows})
-        if len(ids) <= DECORATE_PUSHDOWN_MAX_IDS:
-            big = big.filter(F.col("doc_id").isin(ids))
-        joined = big.join(F.broadcast(small), "doc_id")
-        return joined.select(*cols).orderBy(*order)
-
-    def _empty(self, decorate: bool) -> DataFrame:
-        schema = (
-            "rank int, doc_id long, score double, repo string, path string, commit string"
-            if decorate
-            else "rank int, doc_id long, score double"
-        )
-        return self.spark.createDataFrame([], schema)
-
-    def _empty_batch(self, decorate: bool) -> DataFrame:
-        schema = "query_id long, rank int, doc_id long, score double"
-        if decorate:
-            schema += ", repo string, path string, commit string"
-        return self.spark.createDataFrame([], schema)
+    def _with_docs(self, rows: list[tuple], at: int) -> list[tuple]:
+        """Each row + the doc columns of its doc_id (``row[at]``), looked
+        up on the driver (``_DocLookup``); a doc_id missing from the docs
+        table drops its row, as the former inner join did."""
+        if self._docs_lookup is None:
+            self._docs_lookup = _DocLookup(*fsio.filesystem(
+                index_io.table_path(self.index_root, DOCS_DIR)))
+        docs = self._docs_lookup.get(r[at] for r in rows)
+        return [r + docs[r[at]] for r in rows if r[at] in docs]

@@ -45,6 +45,16 @@ def _fs(path: str):
     return pafs.FileSystem.from_uri(path)
 
 
+def filesystem(path: str):
+    """(FileSystem, fs-internal path) for any root: a URI through
+    ``FileSystem.from_uri``, a plain path on the local filesystem."""
+    if is_uri(path):
+        return _fs(path)
+    from pyarrow import fs as pafs
+
+    return pafs.LocalFileSystem(), os.path.abspath(path)
+
+
 def exists(path: str) -> bool:
     if not is_uri(path):
         return os.path.exists(path)

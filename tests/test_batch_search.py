@@ -48,6 +48,17 @@ def test_batch_decorated_schema(searcher):
     assert len(rows) == len(_single(searcher, BATCH[5]))
 
 
+def test_batch_decorate_equals_single_decorate(searcher):
+    """Batch and single decorate share one driver lookup: each query's
+    decorated rows equal the single-query ones, ordered by (query_id,
+    rank)."""
+    rows = [tuple(r) for r in searcher.search_batch(BATCH, decorate=True).collect()]
+    assert rows == sorted(rows, key=lambda r: (r[0], r[1]))
+    for qid, q in BATCH.items():
+        single = [tuple(r) for r in searcher.search(q, "pruned").collect()]
+        assert [r[1:] for r in rows if r[0] == qid] == single, f"query {qid}"
+
+
 def test_batch_empty_inputs(searcher):
     assert searcher.search_batch({}).count() == 0
     assert searcher.search_batch({1: Query(("oovterm",), "AND")}).count() == 0

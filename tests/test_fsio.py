@@ -99,6 +99,14 @@ def test_build_and_search_over_file_uri_root(spark, corpus, index_root):
         want = [(r["rank"], r["doc_id"], r["score"])
                 for r in s_loc.search(q, "pruned", decorate=False).collect()]
         assert got == want and got
+        # decorate reads the docs footers and row groups through pyarrow.fs
+        got = [tuple(r) for r in s_uri.search(q, "pruned").collect()]
+        want = [tuple(r) for r in s_loc.search(q, "pruned").collect()]
+        assert got == want and len(got[0]) == 6
+        batch = {1: q, 2: Query(("hotterm1",), "OR", 3)}
+        got = [tuple(r) for r in s_uri.search_batch(batch, decorate=True).collect()]
+        want = [tuple(r) for r in s_loc.search_batch(batch, decorate=True).collect()]
+        assert got == want and got
     finally:
         shutil.rmtree(local, ignore_errors=True)
 
