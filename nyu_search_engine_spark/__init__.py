@@ -7,5 +7,6 @@ DataFrame/SQL plans, Arrow-vectorized kernels, a document-sharded Parquet
 index layout designed for 10^12-file scale.
 """
 
+from . import zipimport_guard  # noqa: F401  (Spark Python task floor; see module)
 from .constants import BM25_B, BM25_K1, DEFAULT_TOP_K  # noqa: F401
 from .plans.search import Query, bruteforce_topk  # noqa: F401

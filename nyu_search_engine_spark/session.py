@@ -3,6 +3,16 @@
 On a real cluster the same settings apply minus driver memory; AQE stays on
 for runtime coalescing/skew handling, Arrow stays on for the pandas-UDF
 kernels (the mandated vectorized path — BASELINE.json input_hint).
+
+Per-task Python floor: every Spark Python task ends its set-up with
+``importlib.invalidate_caches()``. Before CPython 3.12 that re-reads the
+central directory of every zip on the worker's path at once: 16 reads of
+``pyspark.zip``, the spark-core jar and py4j in a reused worker, ~0.47 s of a
+~0.5 s no-op ``mapInArrow`` task, paid by every stage that runs Python, on
+every task. ``zipimport_guard`` (imported by the package, so installed in a
+worker by the first engine function it unpickles) re-reads an archive only
+when its mtime, size or inode changed. It is a no-op on CPython >= 3.12,
+where the re-read is lazy, and needs no conf key.
 """
 
 from __future__ import annotations
